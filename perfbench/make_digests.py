@@ -1,6 +1,6 @@
-"""Regenerate perfbench/digests.json: run every headline entry's
-``oracle_sql()`` through DuckDB on each data set under perfbench/data
-and store the digest of the result.
+"""Regenerate perfbench/digests.json: run each covered headline entry's
+``oracle_sql()`` through DuckDB on its data set under perfbench/data and
+store the digest of the result.
 
 Usage (from the repository root):  python3 perfbench/make_digests.py
 """
@@ -21,9 +21,17 @@ import entries  # noqa: E402
 import oracle  # noqa: E402
 
 
+# data set -> the entries a run on it covers: smoke runs every entry on
+# sf0.001, timed runs their workload lists on sf0.01
+COVERED = {
+    "sf0.001": entries.RELATIONAL + entries.OPERATORS,
+    "sf0.01": entries.RELATIONAL + entries.OPERATORS_TIMED,
+}
+
+
 def main() -> int:
     out = {}
-    for sf in sorted(os.listdir(oracle.DATA)):
+    for sf, names in COVERED.items():
         sf_dir = os.path.join(oracle.DATA, sf)
         # literal-bearing oracles build their literals for this data set
         os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
@@ -32,7 +40,7 @@ def main() -> int:
         for t in entry.TABLES:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
         out[sf] = {name: oracle.digest(con.execute(sqls[name]).fetchdf())
-                   for name in entries.RELATIONAL + entries.OPERATORS}
+                   for name in names}
         con.close()
         print(f"{sf}: {len(out[sf])} digests", file=sys.stderr)
     with open(oracle.DIGESTS, "w") as f:

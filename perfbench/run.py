@@ -4,14 +4,15 @@ the repository benchmark runs; ``relational_sf0.01`` is kept for local
 runs and the self-test.
 
     python3 perfbench/run.py --workload NAME --seed N --seconds S --trace 0|1
-                             [--smoke] [--full] [--corrupt]
+                             [--smoke] [--corrupt]
 
 Run from the root of a checkout.  Workloads:
 
 * ``relational_sf0.01`` / ``operators_sf0.01``: headline registry entries
-  (perfbench/entries.py) on the sf0.01 copy under perfbench/data; the
-  seed permutes entry order within each pass.  Every result is checked
-  against its stored DuckDB-oracle digest (perfbench/oracle.py).
+  (perfbench/entries.py: all 26 relational ones, and the fixed timed
+  subset of the operator ones) on the sf0.01 copy under perfbench/data;
+  the seed permutes entry order within each pass.  Every result is
+  checked against its stored DuckDB-oracle digest (perfbench/oracle.py).
 * ``excel_etl``: ``QueryEngine.process_queries()`` over seeded
   workbooks (perfbench/workbooks.py), checked against sqlite3.
 
@@ -20,10 +21,14 @@ repeat until ``--seconds`` have elapsed.  With ``--trace 0`` the last
 stdout line carries the end-to-end metrics; with ``--trace 1`` warm
 passes alternate traced and untraced and it carries the per-layer
 metrics (perfbench/spark_counters.py), with spans written to
-``.perfbench_work/traces/``.  ``--smoke`` uses sf0.001 and two small
-workbooks; ``--full`` times every entry of a query workload instead of
-its fixed subset; ``--corrupt`` damages the first result before its
-check (the self-test uses it to prove the check fails).
+``.perfbench_work/traces/``.
+
+``setup_s`` is the median of SETUPS set-ups, each timed from the start
+of its own process to a warmed session: the run's own, then SETUPS - 1
+more in fresh processes (``--setup-probe``) after its session has
+stopped.  ``--smoke`` uses sf0.001, every entry of a query workload's
+list, and two small workbooks; ``--corrupt`` damages the first result
+before its check (the self-test uses it to prove the check fails).
 """
 
 from __future__ import annotations
@@ -35,6 +40,7 @@ import os
 import random
 import shutil
 import statistics
+import subprocess
 import sys
 import time
 
@@ -47,14 +53,18 @@ REQUIRED = ["bench.py", "__spark_entry__.py", "tools/parity.py",
             "etl_excel_to_hyper_tableau_spark/__init__.py"]
 MB = 1e6
 
-QUERY_WORKLOADS = {"relational_sf0.01": "RELATIONAL", "operators_sf0.01": "OPERATORS"}
+# workload -> (entry list of a smoke run, entry list of a timed run)
+QUERY_WORKLOADS = {"relational_sf0.01": ("RELATIONAL", "RELATIONAL"),
+                   "operators_sf0.01": ("OPERATORS", "OPERATORS_TIMED")}
 WORKLOADS = [*QUERY_WORKLOADS, "excel_etl"]
 
 # excel_etl input size: (workbooks, rows per workbook)
 WORKBOOKS = (2, 2000)
 SMOKE_WORKBOOKS = (2, 200)
-MIN_WARM_PASSES = 2
-SETUPS = 5
+# warm passes at least: untraced runs, and each kind in traced runs
+MIN_WARM_PASSES = 1
+MIN_TRACED_PASSES = 2
+SETUPS = 3
 
 END_TO_END = {"setup_s": "s", "cold_s": "s", "warm_s": "s", "p50_s": "s",
               "output_mb": "MB"}
@@ -86,8 +96,9 @@ def parse_args(argv):
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--smoke", action="store_true")
-    ap.add_argument("--full", action="store_true")
     ap.add_argument("--corrupt", action="store_true")
+    ap.add_argument("--setup-probe", action="store_true",
+                    help="only set the session up, print its set-up time and stop")
     return ap.parse_args(argv)
 
 
@@ -142,33 +153,28 @@ class Bench:
         self.layer: dict[str, float] = {}
 
     # -- session ------------------------------------------------------
-    def setup(self, tables_dir: str | None) -> None:
-        """Set the session up SETUPS times and keep the last one.  The
-        first set-up runs from process start (imports, JVM launch, session,
-        warm-up); each later one stops the session and builds it again in
-        the same JVM.  setup_s is the median."""
+    def tables_dir(self) -> str | None:
+        """The parquet tables the set-up resolves, if the workload has any."""
+        return None
+
+    def setup(self) -> None:
+        """Build the session with the program's defaults and warm it: one
+        tiny action, then (query workloads) resolving every table, as
+        bench.py does.  setup_s runs from process start (imports, JVM
+        launch) to here."""
         import __spark_entry__ as entry
         from etl_excel_to_hyper_tableau_spark import get_spark
 
-        times = []
-        t0 = T_START
-        for k in range(SETUPS):
-            if k:
-                self.spark.stop()
-                t0 = time.perf_counter()
-            self.spark = get_spark(app_name="perfbench")
-            t1 = time.perf_counter()
-            self.spark.range(1000).selectExpr("sum(id)").collect()
-            if tables_dir:
-                for t in entry.TABLES:
-                    entry._t(self.spark, tables_dir, t).count()
-            t2 = time.perf_counter()
-            times.append(t2 - t0)
-            if k == 0:
-                self.layer["session.start_s"] = t1 - T_START
-                self.layer["session.warmup_s"] = t2 - t1
-            print(f"# setup{k} {t2 - t0:.3f}s", file=sys.stderr)
-        self.setup_s = med(times)
+        self.spark = get_spark(app_name="perfbench")
+        t1 = time.perf_counter()
+        self.spark.range(1000).selectExpr("sum(id)").collect()
+        if self.tables_dir():
+            for t in entry.TABLES:
+                entry._t(self.spark, self.tables_dir(), t).count()
+        t2 = time.perf_counter()
+        self.layer["session.start_s"] = t1 - T_START
+        self.layer["session.warmup_s"] = t2 - t1
+        self.setup_s = t2 - T_START
 
     def session_record(self) -> dict:
         conf = self.spark.sparkContext.getConf()
@@ -199,16 +205,17 @@ class Bench:
 
     def warm_loop(self, run_pass) -> tuple[list[float], list[float]]:
         """Run warm passes until --seconds elapse (at least
-        MIN_WARM_PASSES; with tracing, at least that many of each kind, in
-        the order traced, untraced, untraced, traced, ... so that warm-up
-        still in progress does not bias the tracing overhead).  Returns
-        (untraced, traced) pass walls."""
+        MIN_WARM_PASSES; with tracing, at least MIN_TRACED_PASSES of each
+        kind, in the order traced, untraced, untraced, traced, ... so that
+        warm-up still in progress does not bias the tracing overhead).
+        Returns (untraced, traced) pass walls."""
         walls: tuple[list[float], list[float]] = ([], [])
         kinds = walls if self.args.trace else walls[:1]
+        least = MIN_TRACED_PASSES if self.args.trace else MIN_WARM_PASSES
         t0 = time.perf_counter()
         i = 0
         while (time.perf_counter() - t0 < self.args.seconds
-               or min(len(w) for w in kinds) < MIN_WARM_PASSES):
+               or min(len(w) for w in kinds) < least):
             traced = bool(self.args.trace) and i % 4 in (0, 3)
             walls[traced].append(run_pass(traced, f"warm{i}"))
             print(f"# warm{i} {'traced ' if traced else ''}{walls[traced][-1]:.3f}s",
@@ -219,20 +226,24 @@ class Bench:
 
 # -- query workloads -----------------------------------------------------
 class QueryBench(Bench):
+    def sf(self) -> str:
+        return "sf0.001" if self.args.smoke else "sf0.01"
+
+    def tables_dir(self) -> str:
+        import oracle
+        return os.path.join(oracle.DATA, self.sf())
+
     def run(self) -> dict:
         import __spark_entry__ as entry
         import entries
         import oracle
 
-        sf = "sf0.001" if self.args.smoke else "sf0.01"
-        self.sf_dir = os.path.join(oracle.DATA, sf)
-        names = getattr(entries, QUERY_WORKLOADS[self.args.workload])
-        if not self.args.full:
-            names = getattr(entries, QUERY_WORKLOADS[self.args.workload] + "_TIMED")
-        self.names = list(names)
-        self.digests = oracle.load()[sf]
+        self.sf_dir = self.tables_dir()
+        lists = QUERY_WORKLOADS[self.args.workload]
+        self.names = list(getattr(entries, lists[0] if self.args.smoke else lists[1]))
+        self.digests = oracle.load()[self.sf()]
         self.digest = oracle.digest
-        self.setup(self.sf_dir)
+        self.setup()
         self.qs = entry.queries()
         self.tracer = None
         if self.args.trace:
@@ -360,7 +371,7 @@ class ExcelBench(Bench):
         import workbooks
         from etl_excel_to_hyper_tableau_spark.sources import xlsx_io
 
-        self.setup(None)
+        self.setup()
         n_files, n_rows = SMOKE_WORKBOOKS if self.args.smoke else WORKBOOKS
         self.in_dir = os.path.join(self.work, "inputs")
         self.out_dir = os.path.join(self.work, "exports")
@@ -525,12 +536,20 @@ def main(argv=None) -> int:
         return 3
     b = (ExcelBench if args.workload == "excel_etl" else QueryBench)(args, work)
     try:
+        if args.setup_probe:
+            b.setup()
+            print(json.dumps({"setup_s": b.setup_s}))
+            return 0
         metrics = b.run()
         session = b.session_record()
     finally:
         if hasattr(b, "spark"):
             b.stop()
         shutil.rmtree(work, ignore_errors=True)
+    if not args.trace:
+        setups = [b.setup_s] + [probe_setup(args) for _ in range(SETUPS - 1)]
+        print("# setups " + " ".join(f"{x:.3f}s" for x in setups), file=sys.stderr)
+        metrics["setup_s"] = med(setups)
     for p in b.problems:
         print(f"perfbench: FAILED {p}", file=sys.stderr)
     record = {"workload": args.workload, "seed": args.seed, "host": host,
@@ -547,13 +566,24 @@ def main(argv=None) -> int:
     return 0
 
 
+def probe_setup(args) -> float:
+    """One set-up in a fresh process, timed from its own start."""
+    cmd = [sys.executable, os.path.abspath(__file__), "--workload", args.workload,
+           "--seed", str(args.seed), "--seconds", "0", "--setup-probe"]
+    p = subprocess.run(cmd + (["--smoke"] if args.smoke else []), cwd=ROOT,
+                       capture_output=True, text=True, timeout=120)
+    if p.returncode != 0:
+        raise RuntimeError(f"set-up probe exited {p.returncode}: {p.stderr[-500:]}")
+    return json.loads(p.stdout.strip().splitlines()[-1])["setup_s"]
+
+
 def write_spans(args, b: Bench, record: dict) -> None:
     out = os.path.join(WORK, "traces")
     os.makedirs(out, exist_ok=True)
     tr = b.tracer
     spans = [{"name": s.name, "trace_id": s.trace_id, "parent": s.parent,
               "start": s.start, "end": s.end, "self_s": tr.self_time(i),
-              "jobs": [s.job0, s.job1], **s.counters}
+              "job_ids": [s.job0, s.job1], **s.counters}
              for i, s in enumerate(tr.spans)]
     with open(os.path.join(out, f"{args.workload}-seed{args.seed}.json"), "w") as f:
         json.dump({"run": record, "layers": b.layer, "spans": spans}, f, indent=1)
