@@ -66,8 +66,7 @@ MIN_WARM_PASSES = 1
 MIN_TRACED_PASSES = 2
 SETUPS = 3
 
-END_TO_END = {"setup_s": "s", "cold_s": "s", "warm_s": "s", "p50_s": "s",
-              "output_mb": "MB"}
+END_TO_END = {"setup_s": "s", "cold_s": "s", "warm_s": "s", "output_mb": "MB"}
 # Every traced run prints all of these, 0 where its workload does not
 # reach the layer.
 PER_LAYER = {
@@ -263,7 +262,6 @@ class QueryBench(Bench):
         metrics = {
             "setup_s": self.setup_s, "cold_s": self.cold_s,
             "warm_s": sum(med(v) for v in self.latencies.values()),
-            "p50_s": med([x for v in self.latencies.values() for x in v]),
             "output_mb": self.output_mb,
         }
         if self.args.trace:
@@ -389,7 +387,7 @@ class ExcelBench(Bench):
         self.layer["session.peak_rss_mb"] = self.peak_rss_mb()
         metrics = {
             "setup_s": self.setup_s, "cold_s": self.cold_s, "warm_s": med(untraced),
-            "p50_s": med(untraced), "output_mb": self.output_mb,
+            "output_mb": self.output_mb,
         }
         if self.args.trace:
             self.layer_metrics(med(traced) - med(untraced))
