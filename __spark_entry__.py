@@ -4359,9 +4359,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cdc_latest_events",
     ]
     changed_r12 = [
-        # entries whose kernel changed in round 12: the segment_dedup
-        # sentinel-row fusion, and the sketch-gauge single-action
-        # collects (hll_distinct / sketch_profile)
+        # pinned for PLANNED kernel work that has NOT landed: the
+        # segment_dedup structural-totals fusion and the sketch-gauge
+        # single-action collects (hll_distinct / sketch_profile).  No
+        # kernel or oracle of these three changed in round 12.
         "segment_dedup", "hll_distinct", "sketch_profile",
     ]
     sampled_r8_r11 = {

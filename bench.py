@@ -242,15 +242,16 @@ def main() -> None:
     # driver's PERF_rN per-query diff has n_common > 0 without relying
     # on BENCH_DETAIL.json (which each run overwrites — the driver's
     # 8-core re-run destroyed its own 32-core detail in round 11).
-    # Values round to 0.01 s: 105 entries ≈ 3 KB on one line, far under
-    # the capture limit the round-2 overflow hit (that was a 37-query
-    # PRETTY-PRINTED dict; this is separators-packed).  Full-precision
-    # detail still goes to BENCH_DETAIL.json.
+    # Values round to 0.001 s (the precision of the warm totals, so a
+    # sub-5 ms entry never reads 0.0): 105 entries ≈ 3.5 KB on one
+    # line, far under the capture limit the round-2 overflow hit (that
+    # was a 37-query PRETTY-PRINTED dict; this is separators-packed).
+    # Full-precision detail still goes to BENCH_DETAIL.json.
     print(json.dumps({
         "metric": "headline_query_wall_seconds",
         "value": total,
         "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in warm.items()},
+        "queries": {k: round(v, 3) for k, v in warm.items()},
         "cold_total": round(sum(cold.values()), 3),
         "n_queries": len(warm),
         "sf": sf_val,

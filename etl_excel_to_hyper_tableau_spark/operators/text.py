@@ -56,7 +56,7 @@ def word_token_count(col: Column) -> Column:
     Counts via ``translate`` deletion rather than ``regexp_replace``:
     bit-identical lengths (the deleted sets equal the regex classes
     [A-Za-z0-9] and [A-Za-z0-9\\s] exactly), measured 10.8× faster at
-    sf1 (2.82 s → 0.26 s isolated, tools/isolate_fertility.py) — the
+    sf1 (2.82 s → 0.26 s isolated, OPTIMIZATION_r11.md §9) — the
     regex path built a full result string per row per pass."""
     word_chars = (F.length(col) - F.length(F.translate(col, _ALNUM, "")))
     other = F.length(F.translate(col, _ALNUM + _JAVA_WS, ""))
@@ -522,14 +522,52 @@ def unigram_surprisal(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 def bm25_scores(df: DataFrame, text_col: str, id_col: str,
                 query_terms: list[str], k1: float = 1.2,
                 b: float = 0.75,
-                corpus_stats: tuple[int, int] | None = None,
-                impl: str = "arrow") -> DataFrame:
+                corpus_stats: tuple[int, int] | None = None) -> DataFrame:
     """Okapi BM25 scores for ``query_terms`` over a document corpus —
     the ranking half of quality-aware retrieval (e.g. picking
     training-set exemplars for a topic).
 
     score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)),
     idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5))   (Lucene's +1 form, ≥ 0).
+
+    ``corpus_stats``: optional precomputed ``(n_docs, sum_dl)``.  The
+    corpus aggregate is a full scan independent of the query; a
+    production deployment computes it once per corpus snapshot and
+    amortizes it across every BM25 query — passing it here removes the
+    second corpus pass.
+
+    Output: ``id, n_terms_hit, score`` for docs hitting ≥1 term.
+
+    Plan: the round-10 verdict flagged the pure-Catalyst form
+    (:func:`_bm25_scores_sql`) as the heaviest plan in PLANS.md (9
+    exchanges / 8 hash aggregates / a BNLJ — three corpus passes
+    feeding four aggregation trees).  The fused shape runs ONE Arrow
+    pass emitting per-document wide rows ``(id, dl, tf per term)`` —
+    checkpointed executor-locally, ~(8 + 8·|terms|) bytes per doc —
+    then ONE aggregate produces N, Σdl, and every per-term df as a
+    single broadcast row, and the score is a static per-term sum in
+    sorted-term order.  The float result is BIT-IDENTICAL to the SQL
+    form's sorted fold: absent terms contribute +0.0, and
+    ``x + (+0.0) == x`` exactly for the non-negative partial sums BM25
+    produces (idf > 0, tf > 0), so skipping vs adding-zero cannot
+    differ.  With no query terms the result is empty and the SQL plan
+    degenerates cleanly, so that case runs it.
+    """
+    terms = sorted({t.lower() for t in query_terms})
+    if not terms:
+        return _bm25_scores_sql(df, text_col, id_col, terms, k1, b,
+                                corpus_stats)
+    return _bm25_scores_arrow(df, text_col, id_col, terms, k1, b,
+                              corpus_stats)
+
+
+def _bm25_scores_sql(df: DataFrame, text_col: str, id_col: str,
+                     terms: list[str], k1: float = 1.2, b: float = 0.75,
+                     corpus_stats: tuple[int, int] | None = None
+                     ) -> DataFrame:
+    """Pure-Catalyst BM25 over the sorted lower-cased ``terms`` — the
+    bit-exact reference for :func:`_bm25_scores_arrow`
+    (tests/test_arrow_kernels.py).
 
     Plan: docs project to (id, lowered-token array, dl) map-only; the
     per-term tf explode is pre-filtered to the query terms *inside the
@@ -540,37 +578,9 @@ def bm25_scores(df: DataFrame, text_col: str, id_col: str,
     Per-doc summation folds the per-term contributions in sorted token
     order (sequential left fold) so the float result is reproducible
     bit-for-bit by any engine folding in the same order.
-
-    ``corpus_stats``: optional precomputed ``(n_docs, sum_dl)``.  The
-    corpus aggregate is a full scan independent of the query; a
-    production deployment computes it once per corpus snapshot and
-    amortizes it across every BM25 query — passing it here removes the
-    second corpus pass, leaving one scan (the term-filtered tf).
-
-    Output: ``id, n_terms_hit, score`` for docs hitting ≥1 term.
-
-    ``impl="arrow"`` (default): the round-10 verdict flagged this as
-    the heaviest plan in PLANS.md (9 exchanges / 8 hash aggregates / a
-    BNLJ — three corpus passes feeding four aggregation trees).  The
-    fused shape runs ONE Arrow pass emitting per-document wide rows
-    ``(id, dl, tf per term)`` — checkpointed executor-locally, ~(8 +
-    8·|terms|) bytes per doc — then ONE aggregate produces N, Σdl, and
-    every per-term df as a single broadcast row, and the score is a
-    static per-term sum in sorted-term order.  The float result is
-    BIT-IDENTICAL to the SQL form's sorted fold: absent terms
-    contribute +0.0, and ``x + (+0.0) == x`` exactly for the
-    non-negative partial sums BM25 produces (idf > 0, tf > 0), so
-    skipping vs adding-zero cannot differ.  ``impl="sql"`` keeps the
-    pure-Catalyst plan (and is the reference for the parity test).
+    With ``corpus_stats`` the corpus pass is skipped, leaving one scan
+    (the term-filtered tf).
     """
-    terms = sorted({t.lower() for t in query_terms})
-    if impl == "arrow" and terms:
-        return _bm25_scores_arrow(df, text_col, id_col, terms, k1, b,
-                                  corpus_stats)
-    if impl == "arrow":        # zero terms: empty result either way —
-        impl = "sql"           # the SQL plan degenerates cleanly
-    if impl != "sql":
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
     terms_arr = F.array(*[F.lit(t) for t in terms])
     docs = (spread(df)
             .select(F.col(id_col).alias("id"),
@@ -619,7 +629,7 @@ def bm25_scores(df: DataFrame, text_col: str, id_col: str,
 def _bm25_scores_arrow(df: DataFrame, text_col: str, id_col: str,
                        terms: list[str], k1: float, b: float,
                        corpus_stats: tuple[int, int] | None) -> DataFrame:
-    """Fused BM25 (see :func:`bm25_scores` ``impl="arrow"``).  The
+    """Fused BM25 (see :func:`bm25_scores`).  The
     scoring ARITHMETIC stays in Catalyst expressions built exactly like
     the SQL form's (same association order, so libm/IEEE results agree
     term-for-term); only the tokenize/count inner loop moves to Python.
@@ -766,8 +776,7 @@ def compression_ratio(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def winnow_fingerprints(df: DataFrame, text_col: str, id_col: str,
-                        k: int = 8, w: int = 6,
-                        impl: str = "arrow") -> DataFrame:
+                        k: int = 8, w: int = 6) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
     "Winnowing: Local Algorithms for Document Fingerprinting",
     SIGMOD'03) — the MOSS near-dup/plagiarism sketch.
@@ -777,6 +786,23 @@ def winnow_fingerprints(df: DataFrame, text_col: str, id_col: str,
     values (sorted) are the document's fingerprint set.  Guarantees at
     least one shared fingerprint for any common substring of length
     ``k + w - 1``.
+
+    The per-document gram-hash + window-min loop runs as an Arrow
+    ``mapInPandas`` kernel — hashlib md5 (C) + numpy
+    ``sliding_window_view`` min — because the Catalyst form's HOF
+    lambdas are interpreted per gram (measured 2.4× of the DuckDB
+    baseline at sf1; the Arrow kernel ~1 µs/gram).  The pure-Catalyst
+    form, :func:`_winnow_fingerprints_sql`, is its bit-exact reference
+    (tests/test_arrow_kernels.py).
+
+    Output: ``id, n_grams, n_fps, fingerprints`` (sorted bigint array).
+    """
+    return _winnow_fingerprints_arrow(df, text_col, id_col, k, w)
+
+
+def _winnow_fingerprints_sql(df: DataFrame, text_col: str, id_col: str,
+                             k: int = 8, w: int = 6) -> DataFrame:
+    """Pure-Catalyst :func:`winnow_fingerprints` (no Python workers).
 
     Entirely a Catalyst expression (transform/sequence/slice/array_min)
     — map-only, zero shuffles, O(n·w) per document with w small.  The
@@ -793,22 +819,7 @@ def winnow_fingerprints(df: DataFrame, text_col: str, id_col: str,
     ``inline`` expands the result struct in one Generate node so no
     downstream projection can re-inline the computation (same escapes
     as :func:`clean_corpus`).
-
-    ``impl``: ``"arrow"`` (default) runs the per-document gram-hash +
-    window-min loop as an Arrow ``mapInPandas`` kernel — hashlib md5
-    (C) + numpy ``sliding_window_view`` min — because the Catalyst
-    form's HOF lambdas are interpreted per gram (measured 2.4× of the
-    DuckDB baseline at sf1; the Arrow kernel ~1 µs/gram).  ``"sql"``
-    keeps the pure-Catalyst expression (no Python workers — the
-    engine-portability reference).  Identical output either way
-    (tests/test_text.py pins arrow≡sql on edge cases).
-
-    Output: ``id, n_grams, n_fps, fingerprints`` (sorted bigint array).
     """
-    if impl == "arrow":
-        return _winnow_fingerprints_arrow(df, text_col, id_col, k, w)
-    if impl != "sql":
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
     from ..functions.hashing import char_ngrams, md5_int64
 
     col = F.col(text_col)
@@ -1417,8 +1428,7 @@ def normalize_text(df: DataFrame, text_col: str, id_col: str,
 
 
 def content_chunks(df: DataFrame, text_col: str, id_col: str,
-                   k: int = 8, mask_bits: int = 6,
-                   impl: str = "arrow") -> DataFrame:
+                   k: int = 8, mask_bits: int = 6) -> DataFrame:
     """Content-defined chunking (the rsync/LBFS rolling-hash technique;
     Muthitacharoen et al., "A Low-Bandwidth Network File System",
     SOSP'01): cut each document where the char ``k``-gram hash ends a
@@ -1430,25 +1440,27 @@ def content_chunks(df: DataFrame, text_col: str, id_col: str,
     = shared storage/processing.
 
     Expected chunk length ≈ ``2^mask_bits`` chars.  The final chunk
-    always ends at the document end.  Map-only Catalyst expressions;
-    the gram-hash array is lambda-bound once per row (the same
-    O(n²)-re-evaluation escape as :func:`winnow_fingerprints` — the
-    boundary filter re-runs only cheap modular arithmetic over the
-    materialized hashes, never the md5s).  NULL/empty documents emit
-    no rows.
+    always ends at the document end.  NULL/empty documents emit no
+    rows.  The gram-hash + boundary scan runs as an Arrow
+    ``mapInPandas`` kernel (the interpreted-HOF premium of the
+    pure-Catalyst form measured 4.2× of baseline at sf1 — the worst of
+    the corpus-linear tail); :func:`_content_chunks_sql` is its
+    bit-exact reference (tests/test_arrow_kernels.py).
 
     Output: ``id, chunk_idx (1-based), start_char (1-based), length,
     chunk_hash`` (60-bit portable md5 of the chunk text).
-
-    ``impl="arrow"`` (default): the gram-hash + boundary scan runs as
-    an Arrow ``mapInPandas`` kernel (the interpreted-HOF premium
-    measured 4.2× of baseline at sf1 — the worst of the corpus-linear
-    tail); ``"sql"`` keeps the pure-Catalyst form.  Identical output.
     """
-    if impl == "arrow":
-        return _content_chunks_arrow(df, text_col, id_col, k, mask_bits)
-    if impl != "sql":
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
+    return _content_chunks_arrow(df, text_col, id_col, k, mask_bits)
+
+
+def _content_chunks_sql(df: DataFrame, text_col: str, id_col: str,
+                        k: int = 8, mask_bits: int = 6) -> DataFrame:
+    """Pure-Catalyst :func:`content_chunks`.  Map-only Catalyst
+    expressions; the gram-hash array is lambda-bound once per row (the
+    same O(n²)-re-evaluation escape as :func:`_winnow_fingerprints_sql`
+    — the boundary filter re-runs only cheap modular arithmetic over the
+    materialized hashes, never the md5s).
+    """
     from ..functions.hashing import char_ngrams, md5_int64
 
     col = F.col(text_col)
@@ -1600,7 +1612,7 @@ def vocab_drift(df_a: DataFrame, df_b: DataFrame, text_col: str,
 
 
 def dup_ngram_stats(df: DataFrame, text_col: str, group_col: str,
-                    n: int = 8, impl: str = "sql") -> DataFrame:
+                    n: int = 8) -> DataFrame:
     """Corpus-level duplicate n-gram rate per group (the measurement
     behind Lee et al. 2022's "Deduplicating Training Data Makes
     Language Models Better" analysis): for each group (source,
@@ -1617,25 +1629,15 @@ def dup_ngram_stats(df: DataFrame, text_col: str, group_col: str,
     counts come out of the same aggregate (``sum``/``count`` over the
     per-gram rows), so the corpus is exploded exactly once.
 
-    ``impl``: ``"sql"`` (default) is the pure-Catalyst explode;
-    ``"arrow"`` is a ``mapInPandas`` kernel that pre-aggregates
-    (group, gram) counts per partition.  MEASURED EQUAL at sf1
-    (arrow 1.58 s vs sql 1.63 s, round 11) and the attribution shows
-    why: in-worker compute is 0.27 s — the wall is the corpus-sized
-    distinct exchange, because word-8-grams are ~100% unique (2.36 M
-    grams, 2.36 M distinct at sf1), so local pre-aggregation collapses
-    NOTHING and every gram must cross to its reducer exactly once on
-    either path.  That exchange is the operator's floor on any
-    multi-process engine; the SQL form stays default (no Python-worker
-    dependency, whole plan JVM-side).  Both paths produce identical
-    output (tests/test_arrow_kernels.py).
+    The wall is the corpus-sized distinct exchange: word-8-grams are
+    ~100% unique (2.36 M grams, 2.36 M distinct at sf1), so per-partition
+    pre-aggregation collapses NOTHING and every gram must cross to its
+    reducer exactly once.  That exchange is the operator's floor on any
+    multi-process engine — a Python kernel moving the tokenize loop
+    off the JVM measured no faster (OPTIMIZATION_r11.md §4).
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    if impl == "arrow":
-        return _dup_ngram_stats_arrow(df, text_col, group_col, n)
-    if impl != "sql":
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
     toks = tokens(F.col(text_col))
 
     def _grams(ts):
@@ -1652,74 +1654,6 @@ def dup_ngram_stats(df: DataFrame, text_col: str, group_col: str,
                 .select(F.col(group_col).alias("grp"),
                         F.explode(grams).alias("gram"))
                 .groupBy("grp", "gram").agg(F.count(F.lit(1)).alias("cnt")))
-    return (per_gram.groupBy("grp")
-            .agg(F.sum("cnt").cast("long").alias("total_ngrams"),
-                 F.count(F.lit(1)).cast("long").alias("distinct_ngrams"))
-            .withColumn("dup_frac",
-                        F.lit(1.0) - F.col("distinct_ngrams")
-                        / F.col("total_ngrams").cast("double"))
-            .select(F.col("grp").alias(group_col), "total_ngrams",
-                    "distinct_ngrams", "dup_frac"))
-
-
-def _dup_ngram_stats_arrow(df: DataFrame, text_col: str, group_col: str,
-                           n: int, flush_at: int = 1 << 21) -> DataFrame:
-    """Arrow kernel for :func:`dup_ngram_stats`: per-partition
-    (group, gram) Counter → partial-count rows → the same
-    ``groupBy(grp, gram)`` merge and group-bounded final aggregate.
-    Cross-partition gram dedup stays in the Spark aggregate (a gram
-    seen in two partitions must count as ONE distinct), so the kernel
-    only moves the tokenize/join inner loop to Python.  The Counter
-    flushes at ``flush_at`` distinct grams — worst-case executor state
-    is bounded regardless of partition size; flushed duplicates merge
-    in the downstream aggregate.
-
-    Exchange representation: the FULL 16-byte md5 digest of each gram,
-    not the gram text — fixed-width binary keys cut the shuffle bytes
-    ~2-4× and hash-aggregate faster than variable-length strings.
-    Distinctness over md5-128 equals distinctness over the text unless
-    the corpus contains an md5 collision (probability ~n²/2^129 —
-    ~10^-26 at a trillion grams; the same full-hash-identity assumption
-    the exact-dedup family already makes).  ``impl="sql"`` remains the
-    collision-free reference."""
-    grp_type = df.schema[group_col].dataType.simpleString()
-    schema = f"grp {grp_type}, gram binary, cnt long"
-
-    def run(batches):
-        import hashlib
-        from collections import Counter
-
-        import pandas as pd
-
-        from ..functions.pykernels import py_tokens
-
-        md5 = hashlib.md5
-
-        def emit(c: Counter):
-            ks = list(c.keys())
-            return pd.DataFrame(
-                {"grp": [g for g, _ in ks],
-                 "gram": [m for _, m in ks],
-                 "cnt": [c[k] for k in ks]})
-
-        c: Counter = Counter()
-        for pdf in batches:
-            for g, t in zip(pdf["__g__"], pdf["__t__"]):
-                toks = py_tokens(t)
-                for i in range(len(toks) - (n - 1)):
-                    gram = " ".join(toks[i:i + n])
-                    c[(g, md5(gram.encode("utf-8")).digest())] += 1
-            if len(c) >= flush_at:
-                yield emit(c)
-                c = Counter()
-        if c:
-            yield emit(c)
-
-    per_gram = (spread(df)
-                .select(F.col(group_col).alias("__g__"),
-                        F.col(text_col).alias("__t__"))
-                .mapInPandas(run, schema)
-                .groupBy("grp", "gram").agg(F.sum("cnt").alias("cnt")))
     return (per_gram.groupBy("grp")
             .agg(F.sum("cnt").cast("long").alias("total_ngrams"),
                  F.count(F.lit(1)).cast("long").alias("distinct_ngrams"))
@@ -1859,32 +1793,31 @@ def remove_boilerplate_lines(df: DataFrame, text_col: str, id_col: str,
 # ---------------------------------------------------------------------------
 
 def dictionary_tag(df: DataFrame, text_col: str, id_col: str,
-                   phrases: list[str], max_dict: int = 1_000_000,
-                   impl: str = "arrow") -> DataFrame:
+                   phrases: list[str], max_dict: int = 1_000_000) -> DataFrame:
     """Tag documents against a phrase dictionary — the corpus-curation
     step that routes documents to taxonomy buckets (topic lists, unsafe-
     content term lists, domain keyword sets).  The single-node classic
     is an Aho-Corasick / FlashText automaton walked over each document;
-    the Spark-first shape is the other way around: generate document
-    n-grams ONLY at the token lengths the dictionary actually contains
-    and broadcast-join them against the dictionary, so the corpus never
-    shuffles and the automaton state never exists.
+    here each document's hits are counted in an Arrow kernel against
+    the dictionary set (:func:`_dictionary_tag_arrow` — zero shuffles).
+    The broadcast-join plan, :func:`_dictionary_tag_sql`, is its
+    bit-exact reference (tests/test_arrow_kernels.py).
 
-    Scale shape (100 TB):
-
-    * The dictionary is the small side by construction (≤ ``max_dict``
-      entries — a valve, raised loudly, because a corpus-sized
-      "dictionary" would silently turn this into a shuffle join).
-      Spark broadcasts it; every match is decided map-side.
-    * The doc side explodes n-grams at ``len(distinct phrase lengths)``
-      window sizes — corpus-linear, same constant as the shingle pass
-      the dedup family already pays.
-    * One hash aggregate on (doc, phrase) — high-entropy key, partial
-      aggregation absorbs hot phrases.
+    The dictionary is the small side by construction (≤ ``max_dict``
+    entries — a valve, raised loudly, because a corpus-sized
+    "dictionary" belongs in a pre-staged table, not a task closure).
 
     Output: one row per (document, matched phrase):
     ``doc_id, phrase, n_hits`` (occurrence count at any alignment).
     """
+    norm, lengths = _phrase_dictionary(phrases, max_dict)
+    return _dictionary_tag_arrow(df, text_col, id_col, norm, lengths)
+
+
+def _phrase_dictionary(phrases: list[str], max_dict: int = 1_000_000
+                       ) -> tuple[list[str], list[int]]:
+    """Validated dictionary → (sorted normalized phrases, sorted
+    distinct phrase token lengths)."""
     if len(phrases) > max_dict:
         raise ValueError(
             f"dictionary has {len(phrases)} entries > max_dict={max_dict}; "
@@ -1899,10 +1832,26 @@ def dictionary_tag(df: DataFrame, text_col: str, id_col: str,
     lengths = sorted({len(p.split()) for p in norm})
     if not lengths:
         raise ValueError("empty phrase dictionary")
-    if impl == "arrow":
-        return _dictionary_tag_arrow(df, text_col, id_col, norm, lengths)
-    if impl != "sql":
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
+    return norm, lengths
+
+
+def _dictionary_tag_sql(df: DataFrame, text_col: str, id_col: str,
+                        norm: list[str], lengths: list[int]) -> DataFrame:
+    """Pure-Catalyst :func:`dictionary_tag` over a
+    :func:`_phrase_dictionary`: generate document n-grams ONLY at the
+    token lengths the dictionary actually contains and broadcast-join
+    them against the dictionary, so the corpus never shuffles and the
+    automaton state never exists.
+
+    Scale shape (100 TB):
+
+    * Spark broadcasts the dictionary; every match is decided map-side.
+    * The doc side explodes n-grams at ``len(distinct phrase lengths)``
+      window sizes — corpus-linear, same constant as the shingle pass
+      the dedup family already pays.
+    * One hash aggregate on (doc, phrase) — high-entropy key, partial
+      aggregation absorbs hot phrases.
+    """
     toks = tokens(F.col(text_col))
     base = (spread(df)
             .select(F.col(id_col).alias("doc_id"), toks.alias("__t__"))

@@ -1,7 +1,8 @@
 """Arrow (mapInPandas) kernel ≡ Catalyst-SQL parity for the
 corpus-linear string operators (round 11: the sf1 >2× tail moved to
-vectorized Python kernels; the SQL forms stay as the engine-portable
-reference and BOTH paths must agree bit-for-bit).
+vectorized Python kernels).  The public operators run the kernels; the
+private ``_<name>_sql`` forms are the pure-Catalyst reference and BOTH
+must agree bit-for-bit.
 
 The edge corpus is chosen to break a sloppy kernel:
 * NULL and empty text (row-emission contracts differ per operator);
@@ -62,11 +63,9 @@ def _assert_same(a, b, cols):
 @pytest.mark.parametrize("k,w", [(8, 6), (3, 2), (4, 9)])
 def test_winnow_arrow_matches_sql(spark, edge_df, k, w):
     cols = ["id", "n_grams", "n_fps", "fingerprints"]
-    a = tx.winnow_fingerprints(edge_df, "text", "doc_id", k=k, w=w,
-                               impl="arrow") \
+    a = tx.winnow_fingerprints(edge_df, "text", "doc_id", k=k, w=w) \
         .withColumn("fingerprints", F.array_join("fingerprints", ","))
-    s = tx.winnow_fingerprints(edge_df, "text", "doc_id", k=k, w=w,
-                               impl="sql") \
+    s = tx._winnow_fingerprints_sql(edge_df, "text", "doc_id", k=k, w=w) \
         .withColumn("fingerprints", F.array_join("fingerprints", ","))
     _assert_same(a, s, cols)
 
@@ -74,29 +73,9 @@ def test_winnow_arrow_matches_sql(spark, edge_df, k, w):
 @pytest.mark.parametrize("k,mb", [(8, 6), (3, 2)])
 def test_content_chunks_arrow_matches_sql(spark, edge_df, k, mb):
     cols = ["id", "chunk_idx", "start_char", "length", "chunk_hash"]
-    a = tx.content_chunks(edge_df, "text", "doc_id", k=k, mask_bits=mb,
-                          impl="arrow")
-    s = tx.content_chunks(edge_df, "text", "doc_id", k=k, mask_bits=mb,
-                          impl="sql")
+    a = tx.content_chunks(edge_df, "text", "doc_id", k=k, mask_bits=mb)
+    s = tx._content_chunks_sql(edge_df, "text", "doc_id", k=k, mask_bits=mb)
     _assert_same(a, s, cols)
-
-
-@pytest.mark.parametrize("n", [1, 3, 8])
-def test_dup_ngram_stats_arrow_matches_sql(spark, edge_df, n):
-    cols = ["source", "total_ngrams", "distinct_ngrams", "dup_frac"]
-    a = tx.dup_ngram_stats(edge_df, "text", "source", n=n, impl="arrow")
-    s = tx.dup_ngram_stats(edge_df, "text", "source", n=n, impl="sql")
-    _assert_same(a, s, cols)
-
-
-def test_dup_ngram_stats_arrow_flush_path(spark, edge_df):
-    """A tiny flush threshold forces multiple partial emissions per
-    partition — the downstream merge must still dedup distinct grams
-    across flushes."""
-    a = tx._dup_ngram_stats_arrow(edge_df, "text", "source", 3, flush_at=2)
-    s = tx.dup_ngram_stats(edge_df, "text", "source", n=3, impl="sql")
-    _assert_same(a, s, ["source", "total_ngrams", "distinct_ngrams",
-                        "dup_frac"])
 
 
 PHRASES = ["batch", "vector", "hash join", "table scan", "sort merge",
@@ -105,8 +84,9 @@ PHRASES = ["batch", "vector", "hash join", "table scan", "sort merge",
 
 def test_dictionary_tag_arrow_matches_sql(spark, edge_df):
     cols = ["doc_id", "phrase", "n_hits"]
-    a = tx.dictionary_tag(edge_df, "text", "doc_id", PHRASES, impl="arrow")
-    s = tx.dictionary_tag(edge_df, "text", "doc_id", PHRASES, impl="sql")
+    a = tx.dictionary_tag(edge_df, "text", "doc_id", PHRASES)
+    s = tx._dictionary_tag_sql(edge_df, "text", "doc_id",
+                               *tx._phrase_dictionary(PHRASES))
     _assert_same(a, s, cols)
     # the corpus plants real hits — the parity must not be vacuous
     assert a.count() >= 3
@@ -116,19 +96,15 @@ def test_arrow_kernels_on_real_corpus(spark, sf_dir):
     """Full-table agreement on the driver's smallest real corpus."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     _assert_same(
-        tx.winnow_fingerprints(docs, "text", "doc_id", impl="arrow")
+        tx.winnow_fingerprints(docs, "text", "doc_id")
           .withColumn("fingerprints", F.array_join("fingerprints", ",")),
-        tx.winnow_fingerprints(docs, "text", "doc_id", impl="sql")
+        tx._winnow_fingerprints_sql(docs, "text", "doc_id")
           .withColumn("fingerprints", F.array_join("fingerprints", ",")),
         ["id", "n_grams", "n_fps", "fingerprints"])
     _assert_same(
-        tx.content_chunks(docs, "text", "doc_id", impl="arrow"),
-        tx.content_chunks(docs, "text", "doc_id", impl="sql"),
+        tx.content_chunks(docs, "text", "doc_id"),
+        tx._content_chunks_sql(docs, "text", "doc_id"),
         ["id", "chunk_idx", "start_char", "length", "chunk_hash"])
-    _assert_same(
-        tx.dup_ngram_stats(docs, "text", "source", impl="arrow"),
-        tx.dup_ngram_stats(docs, "text", "source", impl="sql"),
-        ["source", "total_ngrams", "distinct_ngrams", "dup_frac"])
 
 
 def test_pykernels_match_hashing_module(spark):
@@ -197,10 +173,9 @@ def test_bm25_arrow_matches_sql_bitexact(spark, edge_df, stats):
     must replay the SQL fold bit-for-bit, including the +0.0 absent
     terms and the corpus_stats override path."""
     terms = ["the", "hash", "batch", "absentterm"]
-    a = tx.bm25_scores(edge_df, "text", "doc_id", terms,
-                       corpus_stats=stats, impl="arrow")
-    s = tx.bm25_scores(edge_df, "text", "doc_id", terms,
-                       corpus_stats=stats, impl="sql")
+    a = tx.bm25_scores(edge_df, "text", "doc_id", terms, corpus_stats=stats)
+    s = tx._bm25_scores_sql(edge_df, "text", "doc_id", sorted(terms),
+                            corpus_stats=stats)
     _assert_same(a, s, ["id", "n_terms_hit", "score"])
     assert a.count() >= 2
 
@@ -208,6 +183,6 @@ def test_bm25_arrow_matches_sql_bitexact(spark, edge_df, stats):
 def test_bm25_arrow_real_corpus_bitexact(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     terms = ["spark", "vector", "stream"]
-    a = tx.bm25_scores(docs, "text", "doc_id", terms, impl="arrow")
-    s = tx.bm25_scores(docs, "text", "doc_id", terms, impl="sql")
+    a = tx.bm25_scores(docs, "text", "doc_id", terms)
+    s = tx._bm25_scores_sql(docs, "text", "doc_id", sorted(terms))
     _assert_same(a, s, ["id", "n_terms_hit", "score"])

@@ -4,15 +4,20 @@ The fast default run pins a representative query per physical pattern
 so `pytest -x` catches regressions quickly; the FULL registry runs
 behind the opt-in ``full_oracle`` marker (``pytest -m full_oracle``) —
 the round-5 verdict's fix for rewritten operators going stale between
-driver correctness windows.  The CLI equivalent is tools/parity.py."""
+driver correctness windows.  The CLI equivalent is tools/parity.py,
+whose ``compare`` both tests here call."""
 
 import os
+import sys
 
-import duckdb
-import pandas as pd
 import pytest
 
 import __spark_entry__ as entry
+
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+
+import parity  # noqa: E402
 
 SAMPLE = [
     "pricing_summary",        # scan + hash agg
@@ -34,17 +39,9 @@ SAMPLE = [
 ]
 
 
-def _value_hash(df: pd.DataFrame) -> list:
-    df = df[sorted(df.columns)]
-    return sorted(tuple(repr(v) for v in row)
-                  for row in df.itertuples(index=False, name=None))
-
-
 @pytest.fixture(scope="module")
 def ducks(sf_dir):
-    con = duckdb.connect()
-    for t in entry.TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = parity.oracle_connection(sf_dir)
     yield con
     con.close()
 
@@ -53,9 +50,7 @@ def ducks(sf_dir):
 def test_query_matches_oracle(spark, sf_dir, ducks, name):
     spark_df = entry.queries()[name](spark, sf_dir).toPandas()
     oracle_df = ducks.execute(entry.oracle_sql()[name]).fetchdf()
-    assert sorted(spark_df.columns) == sorted(oracle_df.columns)
-    assert len(spark_df) == len(oracle_df)
-    assert _value_hash(spark_df) == _value_hash(oracle_df)
+    assert parity.compare(spark_df, oracle_df) == []
 
 
 ALL_QUERIES = list(entry.queries())
@@ -64,18 +59,13 @@ ALL_QUERIES = list(entry.queries())
 @pytest.mark.full_oracle
 @pytest.mark.parametrize("name", ALL_QUERIES)
 def test_full_registry_matches_oracle(spark, sf_dir, ducks, name):
-    # literal-bearing oracles (embedding_whiten) build their literals
-    # for the sf the oracle will run on
-    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
     spark_df = entry.queries()[name](spark, sf_dir).toPandas()
     osql = entry.oracle_sql().get(name)
     if osql is None:
         assert len(spark_df) > 0
         return
     oracle_df = ducks.execute(osql).fetchdf()
-    assert sorted(spark_df.columns) == sorted(oracle_df.columns)
-    assert len(spark_df) == len(oracle_df)
-    assert _value_hash(spark_df) == _value_hash(oracle_df)
+    assert parity.compare(spark_df, oracle_df) == []
 
 
 def test_inventory_complete():

@@ -3,6 +3,9 @@
 DuckDB on the same parquet, compare row count, column names and an
 order-insensitive value hash.
 
+:func:`compare` is the one Spark-vs-oracle comparison;
+tests/test_oracle_parity.py and tools/verify_drive.py call it too.
+
 Usage: python tools/parity.py [sf_dir] [query_name ...]
 """
 
@@ -28,20 +31,52 @@ def value_hash(df: pd.DataFrame) -> int:
     return hash(tuple(rows))
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-    # literal-bearing oracles (embedding_whiten) build their literals
-    # for the sf the oracle will RUN on
+def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    """Differences between a Spark result and its oracle result: row
+    count, column names, then the value hash (with up to three
+    differing rows).  Empty when they match."""
+    problems = []
+    if len(sdf) != len(odf):
+        problems.append(f"rows {len(sdf)} vs {len(odf)}")
+    if sorted(sdf.columns) != sorted(odf.columns):
+        problems.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
+    if problems or value_hash(sdf) == value_hash(odf):
+        return problems
+    problems.append("value-hash mismatch")
+    cols = sorted(sdf.columns)
+    try:
+        a = sdf[cols].sort_values(cols).reset_index(drop=True)
+        b = odf[cols].sort_values(cols).reset_index(drop=True)
+    except TypeError:  # unorderable cells (arrays): no row listing
+        return problems
+    for i in range(len(a)):
+        ra, rb = list(a.iloc[i]), list(b.iloc[i])
+        if [repr(x) for x in ra] != [repr(x) for x in rb]:
+            problems.append(f"row {i}: spark={ra} duck={rb}")
+            if len(problems) > 3:
+                break
+    return problems
+
+
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB with every ``entry.TABLES`` parquet of ``sf_dir`` as a
+    view.  Literal-bearing oracles (embedding_whiten) build their
+    literals for the sf the oracle will RUN on, so this also points
+    them at ``sf_dir``."""
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
-    spark = get_spark(master="local[8]")
     con = duckdb.connect()
     for t in entry.TABLES:
         src_pq = f"{sf_dir}/{t}.parquet"
         if os.path.isdir(src_pq):  # Spark-written table = a directory
             src_pq += "/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src_pq}'")
+    return con
 
+
+def sweep(spark, sf_dir: str, only=()) -> list[str]:
+    """Compare every ``queries()`` entry (or those in ``only``) with its
+    oracle, printing one OK/FAIL line each; returns the failed names."""
+    con = oracle_connection(sf_dir)
     qs, oracles = entry.queries(), entry.oracle_sql()
     failures = []
     for name, fn in qs.items():
@@ -64,29 +99,20 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: oracle error: {str(e)[:300]}")
             continue
-        problems = []
-        if len(sdf) != len(odf):
-            problems.append(f"rows {len(sdf)} vs {len(odf)}")
-        if sorted(sdf.columns) != sorted(odf.columns):
-            problems.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
-        if not problems and value_hash(sdf) != value_hash(odf):
-            problems.append("value-hash mismatch")
-            a = sdf[sorted(sdf.columns)].sort_values(sorted(sdf.columns)).reset_index(drop=True)
-            b = odf[sorted(odf.columns)].sort_values(sorted(odf.columns)).reset_index(drop=True)
-            diff_shown = 0
-            for i in range(min(len(a), len(b))):
-                ra, rb = list(a.iloc[i]), list(b.iloc[i])
-                if [repr(x) for x in ra] != [repr(x) for x in rb]:
-                    print(f"      row {i}: spark={ra}")
-                    print(f"      row {i}: duck ={rb}")
-                    diff_shown += 1
-                    if diff_shown >= 3:
-                        break
+        problems = compare(sdf, odf)
         if problems:
             failures.append(name)
-            print(f"FAIL  {name}: {'; '.join(problems)}")
+            print(f"FAIL  {name}: " + "\n      ".join(problems))
         else:
             print(f"OK    {name}: {len(sdf)} rows")
+    con.close()
+    return failures
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    spark = get_spark(master="local[8]")
+    failures = sweep(spark, sf_dir, set(sys.argv[2:]))
     spark.stop()
     print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL OK")
     return 1 if failures else 0

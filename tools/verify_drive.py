@@ -1,8 +1,7 @@
 """One-command verify drive: (1) E2E library run over a generated xlsx
-workbook, (2) every ``queries()`` entry executed at the given sf with
-row-count comparison against its DuckDB oracle (use tools/parity.py for
-the stricter value-hash comparison — this drive optimizes for speed as
-a pre-commit gate).
+workbook, (2) every ``queries()`` entry executed at the given sf and
+compared with its DuckDB oracle by tools/parity.py (row count, columns,
+value hash).
 
 Usage: python tools/verify_drive.py [sf_dir]   (default sf0.001)
 Exit code 0 = everything ran and matched.
@@ -14,11 +13,10 @@ import os
 import sys
 import tempfile
 
-import duckdb
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "tools")]
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-import __spark_entry__ as entry  # noqa: E402
+import parity  # noqa: E402
 from etl_excel_to_hyper_tableau_spark import (  # noqa: E402
     QueryBundle, QueryEngine, get_spark,
 )
@@ -27,9 +25,6 @@ from etl_excel_to_hyper_tableau_spark.sources import xlsx_io  # noqa: E402
 
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    # literal-bearing oracles (embedding_whiten) build their literals
-    # for the sf the oracle will RUN on
-    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf
     spark = get_spark(master="local[8]")
 
     # 1. library E2E: workbook in → engine → workbook out
@@ -43,22 +38,9 @@ def main() -> int:
     assert out, "library E2E produced no output"
     print(f"E2E drive ok: {out}")
 
-    # 2. driver contract: every query runs; oracle row counts match
-    con = duckdb.connect()
-    for t in entry.TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-    qs, oracles = entry.queries(), entry.oracle_sql()
-    bad = []
-    for name, fn in qs.items():
-        try:
-            n_spark = len(fn(spark, sf).toPandas())
-            if name in oracles:
-                n_oracle = len(con.execute(oracles[name]).fetchdf())
-                if n_spark != n_oracle:
-                    bad.append((name, n_spark, n_oracle))
-        except Exception as ex:  # noqa: BLE001 — report, don't die
-            bad.append((name, str(ex)[:160]))
-    print(f"checked: {len(qs)} bad: {bad}")
+    # 2. driver contract: every query runs and matches its oracle
+    bad = parity.sweep(spark, sf)
+    print(f"bad: {bad}")
     spark.stop()
     return 1 if bad else 0
 
