@@ -4,8 +4,7 @@ The fast default run pins a representative query per physical pattern
 so `pytest -x` catches regressions quickly; the FULL registry runs
 behind the opt-in ``full_oracle`` marker (``pytest -m full_oracle``) —
 the round-5 verdict's fix for rewritten operators going stale between
-driver correctness windows.  The CLI equivalent is tools/parity.py,
-whose ``compare`` both tests here call."""
+driver correctness windows.  The CLI equivalent is tools/parity.py."""
 
 import os
 import sys

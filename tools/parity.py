@@ -31,6 +31,15 @@ def value_hash(df: pd.DataFrame) -> int:
     return hash(tuple(rows))
 
 
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    spark = get_spark(master="local[8]")
+    failures = sweep(spark, sf_dir, set(sys.argv[2:]))
+    spark.stop()
+    print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL OK")
+    return 1 if failures else 0
+
+
 def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
     """Differences between a Spark result and its oracle result: row
     count, column names, then the value hash (with up to three
@@ -107,15 +116,6 @@ def sweep(spark, sf_dir: str, only=()) -> list[str]:
             print(f"OK    {name}: {len(sdf)} rows")
     con.close()
     return failures
-
-
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark(master="local[8]")
-    failures = sweep(spark, sf_dir, set(sys.argv[2:]))
-    spark.stop()
-    print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL OK")
-    return 1 if failures else 0
 
 
 if __name__ == "__main__":

@@ -38,7 +38,7 @@ def main() -> int:
     assert out, "library E2E produced no output"
     print(f"E2E drive ok: {out}")
 
-    # 2. driver contract: every query runs and matches its oracle
+    # 2. every queries() entry runs and matches its oracle
     bad = parity.sweep(spark, sf)
     print(f"bad: {bad}")
     spark.stop()
