@@ -43,13 +43,15 @@ def get_spark(app_name: str = "etl_excel_to_hyper_tableau_spark",
               extra_conf: dict | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    when no cluster master is configured; on a real deployment the master
-    comes from spark-submit and this argument stays ``None``.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default the
+    cores this process may run on) when no cluster master is configured;
+    on a real deployment the master comes from spark-submit and this
+    argument stays ``None``.
     """
+    host_cpus = len(os.sched_getaffinity(0))
     builder = SparkSession.builder.appName(app_name)
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus))
         master = f"local[{cpus}]"
     builder = builder.master(master)
     if master.startswith("local"):
@@ -62,7 +64,7 @@ def get_spark(app_name: str = "etl_excel_to_hyper_tableau_spark",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     if shuffle_partitions is None:
         cpus_str = master[master.find("[") + 1:master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 32 if cpus_str == "*" else int(cpus_str or 32)
+        shuffle_partitions = host_cpus if cpus_str == "*" else int(cpus_str or 32)
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:

@@ -7,8 +7,14 @@ A1, §7.4-4):
 
 * xlsx is zipped XML with no splittable internal structure, so the unit
   of parallelism is the *file*, never byte ranges within one;
-* small inputs (the reference's actual scale): parse on the driver and
-  ``spark.createDataFrame`` with Arrow — one JVM hop, no shuffle;
+* small inputs (the reference's actual scale): parse on the driver,
+  build one typed Arrow array per column and hand the ``pa.Table`` to
+  ``spark.createDataFrame`` — one JVM hop, no shuffle.  Below
+  ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+  default) Spark holds the table as a ``LocalRelation`` in the JVM,
+  above it as a JVM-decoded Arrow RDD; either way no query, combine or
+  sink job that scans the staged sheet starts a Python worker (a list
+  of Python rows would stage a PythonRDD, re-pickled on every action);
 * many files (the 100 TB story is thousands of workbooks): load paths
   with ``spark.read.format("binaryFile")`` and parse each file inside
   executors via ``mapInPandas`` — per-file parallelism, schema declared
@@ -24,29 +30,31 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from . import xlsx_io
 
 
-def _infer_spark_type(values) -> T.DataType:
-    kinds = {type(v) for v in values if v is not None}
-    if kinds <= {bool}:
-        return T.BooleanType()
-    if kinds <= {int}:
-        return T.LongType()
+def _column(values) -> tuple[T.DataType, pa.Array]:
+    """One sheet column → (Spark type, typed Arrow array).  The type is
+    inferred from every value, as ``pd.read_excel`` does: all-bool →
+    bool, all-int → long, int/float → double, all-blank → double (the
+    float64 NaN column pandas gives), anything else → string with each
+    cell rendered by ``str``.  Blanks stay null."""
+    kinds = set(map(type, values)) - {type(None)}
+    if kinds == {bool}:
+        return T.BooleanType(), pa.array(values, pa.bool_())
+    if kinds == {int}:
+        return T.LongType(), pa.array(values, pa.int64())
     if kinds <= {int, float}:
-        return T.DoubleType()
-    return T.StringType()
-
-
-def _to_schema(cols: list[str], rows: list[list]) -> T.StructType:
-    fields = []
-    for i, c in enumerate(cols):
-        col_vals = [r[i] for r in rows[:1000]]
-        fields.append(T.StructField(c, _infer_spark_type(col_vals), True))
-    return T.StructType(fields)
+        if int in kinds:  # Arrow refuses ints past 2**53 as doubles; float() rounds
+            values = [None if v is None else float(v) for v in values]
+        return T.DoubleType(), pa.array(values, pa.float64())
+    if kinds != {str}:
+        values = [None if v is None else str(v) for v in values]
+    return T.StringType(), pa.array(values, pa.string())
 
 
 def merge_excel_schemas(schemas) -> T.StructType:
@@ -80,33 +88,17 @@ def merge_excel_schemas(schemas) -> T.StructType:
     return T.StructType([T.StructField(c, types[c], True) for c in order])
 
 
-def _coerce(rows: list[list], schema: T.StructType) -> list[tuple]:
-    out = []
-    for r in rows:
-        vals = []
-        for v, f in zip(r, schema.fields):
-            if v is None:
-                vals.append(None)
-            elif isinstance(f.dataType, T.DoubleType):
-                vals.append(float(v))
-            elif isinstance(f.dataType, T.LongType):
-                vals.append(int(v))
-            elif isinstance(f.dataType, T.StringType):
-                vals.append(str(v))
-            else:
-                vals.append(v)
-        out.append(tuple(vals))
-    return out
-
-
 def read_excel_sheet(spark: SparkSession, path: str, sheet: str | int = 0) -> DataFrame:
-    """Driver-side read of one sheet → Spark DataFrame, schema inferred
-    (int64/double/bool/string, blanks null), matching the effective
+    """Driver-side read of one sheet → Spark DataFrame held in the JVM,
+    built from one typed Arrow array per column (long/double/bool/
+    string, blanks null, types from every row), matching the effective
     inference of the reference's ``pd.read_excel`` on its shipped data
     (SURVEY §1.3)."""
     cols, rows = xlsx_io.read_sheet(path, sheet)
-    schema = _to_schema(cols, rows)
-    return spark.createDataFrame(_coerce(rows, schema), schema)
+    typed = [_column(v) for v in (zip(*rows) if rows else [()] * len(cols))]
+    schema = T.StructType([T.StructField(c, t, True) for c, (t, _) in zip(cols, typed)])
+    return spark.createDataFrame(pa.Table.from_arrays([a for _, a in typed], names=cols),
+                                 schema)
 
 
 def read_excel_dir_distributed(spark: SparkSession, path_glob: str,

@@ -108,3 +108,72 @@ def test_distributed_excel_schema_merge_reconciliation(spark, tmp_path):
     # file-local missing column -> null
     assert [r["c"] for r in rows if r["source_file"].endswith("f1.xlsx")] \
         == [None, None]
+
+
+def test_staged_sheet_is_a_local_relation(spark, sample_xlsx):
+    """A staged sheet is an Arrow-built LocalRelation, so scanning it
+    starts no Python worker (a list-of-rows frame scans a PythonRDD)."""
+    df = read_excel_sheet(spark, sample_xlsx, "Sheet1")
+    for d in (df, df.groupBy("ok").sum("qty")):
+        plan = d._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_read_excel_sheet_value_contract(spark, tmp_path):
+    """long/double/bool/string, blanks null, a mixed column rendered
+    with str(), an int past 2**53 in a double column rounded as float()
+    does, duplicate header names kept, a header-only sheet typed as
+    all-blank (double) columns with no rows."""
+    p = str(tmp_path / "kinds.xlsx")
+    xlsx_io.write_workbook(p, [
+        ("S", ["i", "f", "b", "s", "blank", "mixed", "i", "num", "boolint"],
+         [[1, 1.5, True, "x", None, 1, 10, 1, True],
+          [2, None, False, None, None, "a", 20, 2.5, 3],
+          [None, 3.0, None, "z", None, 2.5, None, None, None],
+          [-4, -0.25, True, "", None, True, 40, 2**60, False]]),
+        ("H", ["a", "b"], []),
+    ])
+    df = read_excel_sheet(spark, p, "S")
+    assert df.schema.simpleString() == (
+        "struct<i:bigint,f:double,b:boolean,s:string,blank:double,"
+        "mixed:string,i:bigint,num:double,boolint:string>")
+    assert [tuple(r) for r in df.collect()] == [
+        (1, 1.5, True, "x", None, "1", 10, 1.0, "True"),
+        (2, None, False, None, None, "a", 20, 2.5, "3"),
+        (None, 3.0, None, "z", None, "2.5", None, None, None),
+        (-4, -0.25, True, "", None, "True", 40, float(2**60), "False"),
+    ]
+    header_only = read_excel_sheet(spark, p, "H")
+    assert header_only.schema.simpleString() == "struct<a:double,b:double>"
+    assert header_only.collect() == []
+
+
+def test_read_excel_sheet_infers_from_every_row(spark, tmp_path):
+    """A value past row 1000 still decides the column's type: a late
+    float widens to double (no truncation), a late string falls back to
+    string with str() rendering."""
+    p = str(tmp_path / "late.xlsx")
+    rows = [[i, i] for i in range(1000)] + [[3.75, "n/a"]]
+    xlsx_io.write_workbook(p, [("S", ["x", "y"], rows)])
+    df = read_excel_sheet(spark, p, "S")
+    assert df.schema.simpleString() == "struct<x:double,y:string>"
+    assert df.selectExpr("sum(x)").first()[0] == 499503.75
+    ys = [r["y"] for r in df.collect()]
+    assert ys[:3] == ["0", "1", "2"] and ys[-1] == "n/a"
+
+
+def test_all_blank_column_reads_as_double(spark, tmp_path):
+    """An all-blank column is double (pandas' float64 NaN column), so
+    merging it with a bigint column in another file widens to double
+    instead of falling back to string."""
+    from etl_excel_to_hyper_tableau_spark.sources.excel import merge_excel_schemas
+    xlsx_io.write_workbook(str(tmp_path / "blank.xlsx"),
+                           [("S", ["id", "tags"], [[1, None], [2, None]])])
+    xlsx_io.write_workbook(str(tmp_path / "ints.xlsx"),
+                           [("S", ["id", "tags"], [[3, 7], [4, 8]])])
+    blank = read_excel_sheet(spark, str(tmp_path / "blank.xlsx"), "S")
+    ints = read_excel_sheet(spark, str(tmp_path / "ints.xlsx"), "S")
+    assert blank.schema.simpleString() == "struct<id:bigint,tags:double>"
+    assert [r["tags"] for r in blank.collect()] == [None, None]
+    merged = merge_excel_schemas([blank.schema, ints.schema])
+    assert merged.simpleString() == "struct<id:bigint,tags:double>"

@@ -25,7 +25,7 @@ from etl_excel_to_hyper_tableau_spark.sources import xlsx_io  # noqa: E402
 
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
 
     # 1. library E2E: workbook in → engine → workbook out
     d = tempfile.mkdtemp(prefix="verify_")
